@@ -314,11 +314,10 @@ object textexprs {
     * which is unusable for banding. This kernel backs only the
     * candidate-explosion breaker in [[graft.operators.Dedup]]'s prefix
     * plan, where candidates are re-verified exactly, so no oracle ever
-    * needs to recompute it.) Elements: array<bigint> values are used as
-    * base hashes directly (the [[NgramHashSet]] / [[WordNgramHashSet]]
-    * outputs are already [[portableHash60]] hashes); array<string> elements
-    * are [[portableHash60]]-hashed first. Empty set -> null (no signature),
-    * mirroring [[MinHash]] on token-less text. */
+    * needs to recompute it.) Elements are array<bigint> values, used as
+    * base hashes directly (every token-set producer feeding the breaker
+    * already emits hashes). Empty set -> null (no signature), mirroring
+    * [[MinHash]] on token-less text. */
   case class MinHashSet(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -329,18 +328,14 @@ object textexprs {
     // array<int> would silently read garbage through getLong
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
       val ok = left.dataType match {
-        case ArrayType(LongType, _) | ArrayType(StringType, _) => true
+        case ArrayType(LongType, _) => true
         case _ => false
       }
       if (ok && right.dataType == IntegerType)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash_set expects (array<bigint>|array<string>, int), got " +
+        s"minhash_set expects (array<bigint>, int), got " +
           s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
-    private lazy val stringElems: Boolean = left.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
     }
     override protected def nullSafeEval(arrAny: Any, nAny: Any): Any = {
       val arr = arrAny.asInstanceOf[ArrayData]
@@ -357,9 +352,7 @@ object textexprs {
         // acquire a signature component from nothing (r5 advice)
         if (!arr.isNullAt(i)) {
           any = true
-          val base =
-            if (stringElems) portableHash60(arr.getUTF8String(i).toString)
-            else arr.getLong(i)
+          val base = arr.getLong(i)
           var j = 0
           while (j < n) {
             val h = mix64(base ^ (0x9e3779b97f4a7c15L * (j + 1)))

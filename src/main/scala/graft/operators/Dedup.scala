@@ -259,7 +259,7 @@ object Dedup {
     *    dictionary-encoded into a single 64-bit mask, identical masks
     *    collapsed, and mask pairs compared with one popcount each in a
     *    blocked self-join. Per-pair cost is two bit-ops instead of a
-    *    string-array intersection (~100x), and duplicate masks pay once.
+    *    sorted-array intersection, and duplicate masks pay once.
     *  - otherwise: [[jaccardPairsPrefix]] — PPJoin-style prefix filter.
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
@@ -286,14 +286,16 @@ object Dedup {
     * both engines hash identically so the comparison can never drift.
     * Goes straight to the PPJoin prefix plan (an n-gram vocabulary is
     * never <= 64). For web-scale fuzzy matching use [[minhashPairs]]
-    * (LSH-bounded candidates); exact n-gram Jaccard is the verifier tier. */
-  /** `maxCandidatePairs > 0` arms the candidate-explosion circuit breaker
-    * (see [[prefixPlan]]): template-heavy corpora defeat prefix filtering
-    * (every doc shares mid-frequency grams with every other), degenerating
-    * the exact plan toward an all-pairs verify; past the bound, candidates
-    * come from a minhash band join instead (bounded by true similarity, not
-    * gram sharing) at a documented near-1-but-not-provably-1 recall. The
-    * default 0 keeps the plan fully exact. */
+    * (LSH-bounded candidates); exact n-gram Jaccard is the verifier tier.
+    *
+    * `maxCandidatePairs > 0` arms the candidate-explosion circuit breaker
+    * (see [[jaccardPairsPrefix]]): template-heavy corpora defeat prefix
+    * filtering (every doc shares mid-frequency grams with every other),
+    * degenerating the exact plan toward an all-pairs verify; past the
+    * bound, candidates come from a minhash band join instead (bounded by
+    * true similarity, not gram sharing) at a documented
+    * near-1-but-not-provably-1 recall. The default 0 keeps the plan fully
+    * exact. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 12, threshold: Double = 0.8,
                         maxCandidatePairs: Long = 0L): DataFrame = {
@@ -305,7 +307,7 @@ object Dedup {
     val grams = widen(df).select(col(idCol).as("id"),
         ngram_hash_set(col(textCol), n).as("toks"))
       .withColumn("sz", size(col("toks")))
-    jaccardPairsPrefixSortedLongs(grams, threshold, maxCandidatePairs)
+    jaccardPairsPrefix(grams, threshold, maxCandidatePairs)
   }
 
   /** Shared dispatch: one bounded vocabulary probe (<= 65 rows collected)
@@ -319,21 +321,23 @@ object Dedup {
     // as the plans themselves (see jaccardPairsDict docstring).
     val toks = toks0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vocab = toks.select(explode(col("toks")).as("tok")).distinct()
-      .orderBy("tok").as(org.apache.spark.sql.Encoders.STRING).take(65)
+      .orderBy("tok").as(org.apache.spark.sql.Encoders.scalaLong).take(65)
     if (vocab.length <= 64) jaccardPairsDict(toks, vocab, threshold)
     else jaccardPairsPrefix(toks, threshold)
   }
 
+  /** Word token sets as sorted, duplicate-free `array<bigint>`: tokens are
+    * `split(text, " ")` pieces of at least `minTokenLen` code points, each
+    * hashed with `xxhash64` — the same token type as [[ngramJaccardPairs]]'
+    * gram sets, so both share one verify kernel. Jaccard over hashed tokens
+    * equals token Jaccard unless two words of one vocabulary collide in 64
+    * bits (the risk q52's 60-bit gram hashes already accept). */
   private def tokenSets(df: DataFrame, idCol: String, textCol: String,
                         minTokenLen: Int): DataFrame =
     widen(df).select(col(idCol).as("id"),
-        array_distinct(split(col(textCol), " ")).as("toks"))
-      .withColumn("toks",
-        // sorted once per doc (binary UTF8String order) so the per-pair
-        // verify can run the allocation-free merge kernel instead of
-        // array_intersect's per-call hash set (r6); the set content — and
-        // therefore every mask/signature/Jaccard downstream — is unchanged
-        array_sort(expr(s"filter(toks, t -> length(t) >= $minTokenLen)")))
+        array_sort(array_distinct(transform(
+          filter(split(col(textCol), " "), t => length(t) >= minTokenLen),
+          t => xxhash64(t)))).as("toks"))
       .withColumn("sz", size(col("toks")))
       // Jaccard over two EMPTY sets is 0/0: such docs pair with nothing in
       // the naive/prefix plan, so drop them here too — otherwise the dict
@@ -363,7 +367,7 @@ object Dedup {
     * materialize each result (write / localCheckpoint(eager = true)) and
     * then `spark.catalog.clearCache()` between calls. Same contract for
     * the prefix plan's token cache and [[graft.operators.Ann.ivfTopK]]. */
-  def jaccardPairsDict(toks: DataFrame, vocab: Array[String],
+  def jaccardPairsDict(toks: DataFrame, vocab: Array[Long],
                        threshold: Double, blocks: Int = 0): DataFrame = {
     val spark = toks.sparkSession
     import spark.implicits._
@@ -469,45 +473,6 @@ object Dedup {
     corpus.join(hits.select(col(idCol)), Seq(idCol), "left_anti")
   }
 
-  /** PPJoin-style prefix-filtered plan (general vocabularies —
-    * Bayardo et al. WWW'07, Vernica et al. SIGMOD'10 for the MapReduce
-    * shape). Provably the same output as the naive all-token join, at a
-    * fraction of the fan-out:
-    *
-    *   1. global token order = (document frequency asc, token asc) — hub
-    *      tokens ("the") sort LAST;
-    *   2. each doc indexes only its first p = sz - ceil(t/(1+t) * sz) + 1
-    *      tokens in that order (its rarest ~53% at t = 0.9). Completeness:
-    *      if two sets with J >= t shared no prefix token, every common
-    *      token would lie in one of the two suffixes, so
-    *      overlap <= (ceil(c*sa) - 1) + (ceil(c*sb) - 1) < c*(sa+sb)
-    *      with c = t/(1+t) — but J >= t forces overlap >= c*(sa+sb).
-    *      Contradiction, so every qualifying pair collides on a prefix
-    *      token. Hub tokens never enter the index, so the self-join
-    *      fan-out is bounded by rare-token df, not corpus size;
-    *   3. candidates are size-filtered (t * max(sa, sb) <= min(sa, sb) is
-    *      necessary for J >= t) and verified EXACTLY on the full token
-    *      sets (array_intersect) — no approximation anywhere.
-    *
-    */
-  /** Contract (r6): `toks` must hold SORTED (Spark binary string order),
-    * duplicate-free arrays — [[tokenSets]] satisfies it via
-    * array_sort(array_distinct(...)) — so the exact verify runs the
-    * allocation-free [[graft.functions.vecexprs.SortedInterCountStr]] merge
-    * instead of `array_intersect`'s per-pair hash set. */
-  def jaccardPairsPrefix(toks: DataFrame, threshold: Double): DataFrame =
-    prefixPlan(toks, threshold, sortedLongs = false)
-
-  /** [[jaccardPairsPrefix]] with the candidate verify running through the
-    * codegen'd [[graft.functions.vecexprs.SortedInterCount]] merge kernel —
-    * requires `toks` to be SORTED, duplicate-free `array<bigint>`. Used by
-    * [[ngramJaccardPairs]], whose hashed gram sets satisfy the contract;
-    * on near-all-pairs candidate sets the per-pair hash-set allocation of
-    * `array_intersect` was the dominant stage cost (~2x the whole query). */
-  private[graft] def jaccardPairsPrefixSortedLongs(toks: DataFrame, threshold: Double,
-                                                   maxCandidatePairs: Long = 0L): DataFrame =
-    prefixPlan(toks, threshold, sortedLongs = true, maxCandidatePairs)
-
   /** Prefix-index fan-out estimate: sum over indexed prefix tokens of
     * d*(d-1)/2 (d = docs indexing the token) — an upper bound on the
     * candidate pairs the prefix self-join can emit, in ONE cheap agg over
@@ -563,10 +528,10 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** The per-doc prefix inverted index of [[prefixPlan]] step 1-2 (one row
-    * per (id, indexed prefix token), with the doc size). Factored out so
-    * the fan-out estimate and tests see exactly the frame the candidate
-    * join runs over. */
+  /** The per-doc prefix inverted index of [[jaccardPairsPrefix]] step 1-2
+    * (one row per (id, indexed prefix token), with the doc size). Factored
+    * out so the fan-out estimate and tests see exactly the frame the
+    * candidate join runs over. */
   private[graft] def prefixIndex(toks: DataFrame, threshold: Double): DataFrame = {
     val c = threshold / (1.0 + threshold)
     val inv = toks.select(col("id"), explode(col("toks")).as("tok"))
@@ -585,7 +550,34 @@ object Dedup {
         explode(expr("transform(slice(sorted, 1, plen), s -> s.tok)")).as("tok"))
   }
 
-  private def prefixPlan(toks0: DataFrame, threshold: Double, sortedLongs: Boolean,
+  /** PPJoin-style prefix-filtered plan (general vocabularies —
+    * Bayardo et al. WWW'07, Vernica et al. SIGMOD'10 for the MapReduce
+    * shape). Provably the same output as the naive all-token join, at a
+    * fraction of the fan-out:
+    *
+    *   1. global token order = (document frequency asc, token asc) — hub
+    *      tokens ("the") sort LAST;
+    *   2. each doc indexes only its first p = sz - ceil(t/(1+t) * sz) + 1
+    *      tokens in that order (its rarest ~53% at t = 0.9). Completeness:
+    *      if two sets with J >= t shared no prefix token, every common
+    *      token would lie in one of the two suffixes, so
+    *      overlap <= (ceil(c*sa) - 1) + (ceil(c*sb) - 1) < c*(sa+sb)
+    *      with c = t/(1+t) — but J >= t forces overlap >= c*(sa+sb).
+    *      Contradiction, so every qualifying pair collides on a prefix
+    *      token. Hub tokens never enter the index, so the self-join
+    *      fan-out is bounded by rare-token df, not corpus size;
+    *   3. candidates are size-filtered (t * max(sa, sb) <= min(sa, sb) is
+    *      necessary for J >= t) and verified EXACTLY on the full token
+    *      sets — no approximation anywhere.
+    *
+    * Contract: `toks` holds SORTED, duplicate-free `array<bigint>` sets
+    * (`id`, `toks`, `sz` columns — [[tokenSets]] and `ngram_hash_set`
+    * both satisfy it), so the verify is the codegen'd two-pointer
+    * [[graft.functions.vecexprs.SortedInterCount]] merge, allocation-free
+    * per candidate pair. `maxCandidatePairs > 0` arms the
+    * candidate-explosion circuit breaker ([[bandCandidates]]); the default
+    * 0 keeps the plan fully exact. */
+  def jaccardPairsPrefix(toks0: DataFrame, threshold: Double,
                          maxCandidatePairs: Long = 0L): DataFrame = {
     // the tokenize/gram subtree feeds THREE consumers (the inverted index
     // and both sides of the verify join) — persist it once, same lifecycle
@@ -630,14 +622,7 @@ object Dedup {
     cand
       .join(full.select(col("id").as("id_a"), col("toks").as("toks_a"), col("sz").as("sz_a")), "id_a")
       .join(full.select(col("id").as("id_b"), col("toks").as("toks_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("inter",
-        // both token-set producers emit SORTED duplicate-free arrays
-        // (ngram_hash_set contract / tokenSets' array_sort), so the verify
-        // is always the two-pointer merge kernel — array_intersect's
-        // per-pair hash set was the dominant verify cost on big candidate
-        // sets for the string path too (q27 r6 profile: 4.4 CPU-s)
-        if (sortedLongs) sorted_inter_count(col("toks_a"), col("toks_b"))
-        else sorted_inter_count_str(col("toks_a"), col("toks_b")))
+      .withColumn("inter", sorted_inter_count(col("toks_a"), col("toks_b")))
       .withColumn("jaccard", col("inter").cast("double") /
         (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
       .where(col("jaccard") >= threshold)

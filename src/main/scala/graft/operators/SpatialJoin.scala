@@ -51,8 +51,8 @@ object SpatialJoin {
 
   /** points(pointCols..., lon, lat) ⋈ polys(polyCols..., geom) -> matches.
     *
-    * @param broadcastCover Some(true) to force broadcast of the cover side,
-    *   Some(false) to force shuffle, None = let Catalyst/AQE decide. */
+    * @param broadcastCover Some(true) pins the cover side as the broadcast
+    *   build; anything else leaves the join strategy to Catalyst/AQE. */
   def pointsInPolygons(
       points: DataFrame,
       polys: DataFrame,
@@ -73,7 +73,11 @@ object SpatialJoin {
   /** Skew-resistant variant: identifies hot cover cells from a point-side
     * sample, splits the join into a salted hot part (cover rows replicated
     * S ways, points hashed into one salt bucket) and a plain cold part.
-    * Result set is identical to [[pointsInPolygons]]. */
+    * Result set is identical to [[pointsInPolygons]].
+    *
+    * @param broadcastCover same contract as [[pointsInPolygons]]: Some(true)
+    *   pins the cover side as the broadcast build; anything else leaves
+    *   the join strategy to Catalyst/AQE. */
   def pointsInPolygonsSalted(
       points: DataFrame,
       polys: DataFrame,
@@ -115,8 +119,8 @@ object SpatialJoin {
     // same contract as pointsInPolygons: Some(true) pins the cover side as
     // the broadcast build (r6: the salt explode defeats the planner's size
     // estimate, silently degrading the equijoin to sort-merge — two extra
-    // exchanges — on a cover that comfortably fits a broadcast), None lets
-    // Catalyst/AQE decide for huge polygon layers
+    // exchanges — on a cover that comfortably fits a broadcast); anything
+    // else lets Catalyst/AQE decide for huge polygon layers
     val bc: DataFrame => DataFrame = broadcastCover match {
       case Some(true) => broadcast
       case _          => identity

@@ -53,6 +53,11 @@ class FunctionsSpec extends SparkTestBase {
       spark.sql("SELECT st_geomfromtext(array(1, 2))").collect()
     }
     assert(e.getMessage.contains("DATATYPE_MISMATCH") || e.getMessage.contains("data type mismatch"))
+    // minhash_set takes hashed (array<bigint>) sets only
+    val m = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT minhash_set(array('a', 'b'), 4)").collect()
+    }
+    assert(m.getMessage.contains("minhash_set expects (array<bigint>, int)"), m.getMessage)
   }
 
   test("centroid / wkb / geojson / properties on DataFrames") {

@@ -124,16 +124,19 @@ class OperatorsSpec extends SparkTestBase {
 
   test("jaccard pairs: dict (small-vocab) and prefix (large-vocab) paths == naive") {
     val rnd = new scala.util.Random(11)
-    def naive(docs: Seq[(Long, String)], t: Double): Set[(Long, Long)] = {
-      val sets = docs.map { case (id, s) => id -> s.split(" ").toSet }
+    // Spark's split(text, " ") keeps empty tokens (Java split with limit
+    // -1, like DuckDB's string_split) and length() counts code points
+    def naive(docs: Seq[(Long, String)], t: Double, minLen: Int = 0): Set[(Long, Long)] = {
+      val sets = docs.map { case (id, s) =>
+        id -> s.split(" ", -1).filter(w => w.codePointCount(0, w.length) >= minLen).toSet }
       (for {
         (a, sa) <- sets; (b, sb) <- sets if a < b
         j = (sa intersect sb).size.toDouble / (sa union sb).size
         if j >= t
       } yield (a, b)).toSet
     }
-    def run(docs: Seq[(Long, String)], t: Double): Set[(Long, Long)] =
-      Dedup.jaccardPairs(docs.toDF("doc_id", "text"), "doc_id", "text", t)
+    def run(docs: Seq[(Long, String)], t: Double, minLen: Int = 0): Set[(Long, Long)] =
+      Dedup.jaccardPairs(docs.toDF("doc_id", "text"), "doc_id", "text", t, minLen)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
 
     // small vocabulary (12 tokens) -> dictionary/bitmask plan
@@ -149,11 +152,38 @@ class OperatorsSpec extends SparkTestBase {
       (i.toLong, (if (i % 3 == 0) base.updated(3, "swapped") else base).mkString(" "))
     }
     assert(run(big, 0.85) == naive(big, 0.85))
+
+    // tokenization edge cases: double, leading and trailing spaces (empty
+    // tokens) and non-BMP tokens whose UTF-16 length exceeds their
+    // code-point length, so minTokenLen must count code points. Odd docs
+    // repeat the previous doc's tokens with different spacing.
+    val odd = Seq("a", "bb", "ccc", "\uD83D\uDE00", "\uD83D\uDE00\uD83D\uDE00",
+      "x\uD83D\uDE00", "\uD835\uDD18\uD835\uDD2B\uD835\uDD26")
+    def spaced(ws: Seq[String]): String =
+      (if (rnd.nextInt(4) == 0) " " else "") +
+        ws.reduce((a, b) => a + (if (rnd.nextInt(3) == 0) "  " else " ") + b) +
+        (if (rnd.nextInt(4) == 0) " " else "")
+    def edgeCorpus(vocab: Seq[String], n: Int): Seq[(Long, String)] = {
+      var prev = Seq.empty[String]
+      (0 until n).map { i =>
+        if (i % 2 == 0) prev = rnd.shuffle(vocab).take(5)
+        (i.toLong, spaced(prev))
+      }
+    }
+    val edgeSmall = edgeCorpus(odd ++ Seq("d", "ee", "fff"), 60)
+    val edgeBig = edgeCorpus(odd ++ (1 to 150).map(k => s"w${k}x"), 80)
+    assert(edgeBig.flatMap(_._2.split(" ", -1)).distinct.size > 64, "prefix route")
+    // t = 0.85 pairs only equal sets, so one empty token decides a pair
+    for (minLen <- Seq(0, 2, 3); t <- Seq(0.6, 0.85);
+         (docs, name) <- Seq((edgeSmall, "dict"), (edgeBig, "prefix")))
+      assert(run(docs, t, minLen) == naive(docs, t, minLen), s"$name t=$t minTokenLen=$minLen")
+
     // and directly exercise the prefix path on the small-vocab corpus too
     val toks = small.toDF("doc_id", "text")
       .select(col("doc_id").as("id"),
-        // sorted: jaccardPairsPrefix's r6 contract (merge-kernel verify)
-        array_sort(array_distinct(split(col("text"), " "))).as("toks"))
+        // sorted distinct hashed longs: jaccardPairsPrefix's input contract
+        array_sort(array_distinct(transform(split(col("text"), " "), w => xxhash64(w))))
+          .as("toks"))
       .withColumn("sz", size(col("toks")))
     val viaPrefix = Dedup.jaccardPairsPrefix(toks, 0.7)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet

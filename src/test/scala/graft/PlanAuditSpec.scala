@@ -131,6 +131,22 @@ class PlanAuditSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  test("word and n-gram jaccard verify through the one sorted_inter_count kernel") {
+    spark.catalog.clearCache()
+    // 102 distinct words: past the dict route's 64-token cap, so the word
+    // plan takes the prefix route like the n-gram plan
+    val docs = (1 to 100).map(i => (i.toLong, s"w$i w${i + 1} w${i + 2} common"))
+      .toDF("doc_id", "text")
+    for ((name, out) <- Seq(
+        "word" -> Dedup.jaccardPairs(docs, "doc_id", "text", 0.5),
+        "ngram" -> Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 4, threshold = 0.5))) {
+      val p = out.queryExecution.optimizedPlan.toString
+      assert(p.contains("sorted_inter_count"), s"$name verify must use the merge kernel")
+      assert(!p.contains("array_intersect"), s"$name verify must not use array_intersect")
+    }
+    spark.catalog.clearCache()
+  }
+
   test("tile counts: single shuffle with partial aggregation") {
     val p = plan(SpatialJoin.tileCounts(SynthData.points(spark, dir), 6))
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, "exactly one shuffle")
