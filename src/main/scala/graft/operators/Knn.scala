@@ -27,19 +27,24 @@ import org.apache.spark.storage.StorageLevel
   * ([[writeCelledCorpus]]) that [[knnCelled]] reads per query batch with
   * no re-celling or re-persisting — every round joins the
   * broadcast exploded query-disk against the same materialized blocks, no
-  * per-round rescan of the raw table. Pending queries shrink geometrically
-  * (tracked by one count per round on the new pending set — the same
-  * action that materializes it). Per-round caches are unpersisted as soon
-  * as their successor is materialized, so storage stays O(one round).
+  * per-round rescan of the raw table.
   *
-  * Fault tolerance: by default the per-round pending set is truncated with
+  * One materialization per round: candidates and one sentinel row per
+  * pending query (null point_id/dist, carrying qlon/qlat) go through ONE
+  * window over query_id that both ranks and decides retirement, and the
+  * round is truncated by a single checkpoint whose job also reports the
+  * pending count as an observed metric. Finished rows and the next pending
+  * set are narrow filters over that checkpoint, so lineage stays O(1) and
+  * no cache is taken.
+  *
+  * Fault tolerance: by default each round is truncated with
   * `localCheckpoint(eager = true)`, which stores blocks on executors
   * WITHOUT lineage — correct and fast in local mode (this harness), but on
   * a real cluster an executor loss makes the truncated lineage
   * unrecoverable and fails the job. Pass `reliableCheckpoint = true` (with
-  * `sc.setCheckpointDir`) at cluster scale: the pending set is
-  * queries-sized, i.e. tiny relative to the corpus, so the durable write
-  * is cheap per round.
+  * `sc.setCheckpointDir`) at cluster scale: a round holds at most k + 1
+  * rows per pending query, i.e. tiny relative to the corpus, so the
+  * durable write is cheap per round.
   */
 object Knn {
 
@@ -48,12 +53,12 @@ object Knn {
   /** queries(query_id, qlon, qlat) x points(point_id, lon, lat) -> top-k
     * (query_id, point_id, rnk).
     *
-    * `reliableCheckpoint = true` truncates the per-round pending set with a
-    * durable `checkpoint()` (requires `sc.setCheckpointDir`) instead of
+    * `reliableCheckpoint = true` truncates each round with a durable
+    * `checkpoint()` (requires `sc.setCheckpointDir`) instead of
     * executor-local `localCheckpoint()` — survives executor loss on a real
-    * cluster; the pending set is queries-sized, so the durable write is
-    * cheap per round. Local mode keeps the default (no durability need,
-    * no checkpoint-dir I/O). */
+    * cluster; a round is queries-sized, so the durable write is cheap.
+    * Local mode keeps the default (no durability need, no checkpoint-dir
+    * I/O). */
   def knn(queries: DataFrame, points: DataFrame, k: Int, level: Int = 8,
           reliableCheckpoint: Boolean = false): DataFrame = {
     // celled corpus: materialized once (memory/disk cache), reused by every
@@ -82,7 +87,15 @@ object Knn {
     * column computed at the SAME `level` (e.g. the table written by
     * [[writeCelledCorpus]], read back with `spark.read.parquet`). No cache
     * is taken here — the caller owns the corpus materialization (a
-    * parquet-backed corpus IS the materialization). */
+    * parquet-backed corpus IS the materialization).
+    *
+    * Jobs: one corpus count (sizes the start radius), then one checkpoint
+    * per round. The returned frame is the union of filters over the round
+    * checkpoints (plus the checkpointed brute-force part for queries with
+    * fewer than k corpus points), so it never reads `celledPts` again. It
+    * owns those checkpoint blocks; the ContextCleaner releases them once
+    * the frame is dropped. Round 1 reads `queries` twice (disk and
+    * sentinel), so `queries` must be deterministic. */
   def knnCelled(queries: DataFrame, celledPts: DataFrame, k: Int, level: Int = 8,
                 reliableCheckpoint: Boolean = false): DataFrame = {
     if (reliableCheckpoint)
@@ -92,93 +105,65 @@ object Knn {
       if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
     val cellH = 180.0 / (1L << level).toDouble
     val maxR = (1L << level).toInt
-
     val pts = celledPts
-    val nPts = pts.count() // one pass: sizes r0 (and fills any caller cache)
+    val r0 = startRadius(pts.count(), k, level)
 
-    // adaptive start radius: size disk(r0) so it expects ~4k points under a
-    // uniform-density estimate — most queries then retire in round one and
-    // the driver-side round loop (the fixed-cost item at small SF) stays
-    // 1-2 iterations. Sparse regions still converge by doubling; the exact
-    // retirement bound is untouched, so the OUTPUT is radius-independent.
-    val density = math.max(nPts.toDouble, 1.0) / (360.0 * 180.0)
-    val r0 = math.max(1, math.min(maxR,
-      math.ceil((math.sqrt(4.0 * k / density) / cellH - 1.0) / 2.0).toInt))
-
-    var pending = queries.cache()
-    var nPending = pending.count()
+    val win = Window.partitionBy("query_id").orderBy(col("dist").asc_nulls_last, col("point_id"))
+    val perQuery = Window.partitionBy("query_id")
+    val noPoint = lit(null).cast(pts.schema("point_id").dataType).as("point_id")
     val finishedParts = scala.collection.mutable.Buffer[DataFrame]()
-    val roundCaches = scala.collection.mutable.Buffer[DataFrame]()
+    var pending = queries.select("query_id", "qlon", "qlat")
+    var nPending = Long.MaxValue // unknown until round 1 runs
     var r = r0
-    val win = Window.partitionBy("query_id").orderBy(col("dist"), col("point_id"))
 
     while (r <= 2 * maxR && nPending > 0) {
       // disk of radius r = rings 0..r, exploded per pending query
       val disk = pending.withColumn("rr", explode(sequence(lit(0), lit(math.min(r, maxR)))))
         .withColumn("cell", explode(st_ring_cells(col("qlon"), col("qlat"), level, col("rr"))))
-        .drop("rr")
-
-      // cached but NOT materialized here — the pending checkpoint below is
-      // the round's single action and fills this cache as a side effect
-      val ranked = broadcast(disk).join(pts, "cell")
-        .withColumn("dist", expr(distExpr))
-        .withColumn("rnk", row_number().over(win))
-        .where(col("rnk") <= k)
-        .select("query_id", "point_id", "rnk", "dist")
-        .cache()
-
+      val cands = broadcast(disk).join(pts, "cell")
+        .select(col("query_id"), col("qlon"), col("qlat"), col("point_id"), expr(distExpr).as("dist"))
+      // the sentinel keeps a query with no candidate in the round and
+      // carries its coordinates into the next pending set
+      val sentinels = pending.select(col("query_id"), col("qlon"), col("qlat"), noPoint,
+        lit(null).cast("double").as("dist"))
       val bound = r * cellH
+      val obs = org.apache.spark.sql.Observation(s"knn-pending-${java.util.UUID.randomUUID}")
       // strict bound: boundary ties force one more round, matching the
-      // brute-force tie-break ordering exactly
-      val done = ranked.groupBy("query_id")
-        .agg(count(lit(1)).as("cnt"), max(col("dist")).as("kth"))
-        .where(col("cnt") === k && col("kth") < lit(bound * bound))
-        .select("query_id")
-
-      finishedParts += ranked.join(done, "query_id").select("query_id", "point_id", "rnk")
-      roundCaches += ranked
-
-      val prevPending = pending
-      // localCheckpoint: materializes the (tiny) new pending set AND
-      // truncates its lineage, so the per-round plan tree stays O(1)-deep
-      // instead of doubling every round (left_anti chains otherwise nest).
-      // The pending count rides the same checkpoint job as an observed
-      // metric (r6): one driver round-trip per round instead of two.
-      val obs = org.apache.spark.sql.Observation(
-        s"knn-pending-${java.util.UUID.randomUUID}")
-      pending = truncate(pending.join(done, Seq("query_id"), "left_anti")
-        .observe(obs, count(lit(1)).as("n")))
+      // brute-force tie-break ordering exactly; the second window reuses
+      // the first one's partitioning (no extra exchange)
+      val round = truncate(cands.unionByName(sentinels)
+        .withColumn("rnk", row_number().over(win))
+        .where(col("rnk") <= k || col("point_id").isNull)
+        .withColumn("done", count(col("point_id")).over(perQuery) === k &&
+          max(col("dist")).over(perQuery) < lit(bound * bound))
+        .observe(obs, count(when(col("point_id").isNull && !col("done"), 1)).as("n")))
       nPending = obs.get.get("n") match {
         case Some(v: java.lang.Number) => v.longValue
         case _ => 0L
       }
-      // NOTE deliberately NOT ParUtil.freeCheckpoint(prevPending): the
-      // finishedParts plans can recompute through the cached `ranked` back
-      // to this frame if a cache block is lost — its (queries-sized)
-      // checkpoint blocks are left to the ContextCleaner instead
-      prevPending.unpersist(false)
+      finishedParts += round.where(col("done") && col("point_id").isNotNull)
+        .select("query_id", "point_id", "rnk")
+      pending = round.where(col("point_id").isNull && !col("done"))
+        .select("query_id", "qlon", "qlat")
       r *= 2
     }
 
-    // any stragglers (fewer than k points in the whole grid): brute force
-    if (nPending > 0) {
-      finishedParts += broadcast(pending).crossJoin(pts)
-        .withColumn("dist", expr(distExpr))
-        .withColumn("rnk", row_number().over(win))
-        .where(col("rnk") <= k)
-        .select("query_id", "point_id", "rnk")
-    }
-    if (finishedParts.isEmpty) { // no queries at all
-      pending.unpersist(false)
-      return knnBrute(queries, pts, k)
-    }
-    // one final materialization; eager localCheckpoint makes the result
-    // self-contained (queries x k rows — tiny) so every per-round cache can
-    // be released immediately after
-    val results = truncate(finishedParts.reduce(_ unionByName _))
-    roundCaches.foreach(_.unpersist(false))
-    pending.unpersist(false)
-    results
+    // any stragglers (fewer than k points in the whole grid): brute force,
+    // truncated so the result never reads the corpus again
+    if (nPending > 0) finishedParts += truncate(knnBrute(pending, pts, k))
+    finishedParts.reduce(_ unionByName _)
+  }
+
+  /** Start radius: size disk(r0) so it expects ~4k points under a
+    * uniform-density estimate — most queries then retire in round one and
+    * the driver-side round loop stays 1-2 iterations. Sparse regions still
+    * converge by doubling; the exact retirement bound is untouched, so the
+    * OUTPUT is radius-independent. */
+  private[graft] def startRadius(nPts: Long, k: Int, level: Int): Int = {
+    val cellH = 180.0 / (1L << level).toDouble
+    val density = math.max(nPts.toDouble, 1.0) / (360.0 * 180.0)
+    math.max(1, math.min((1L << level).toInt,
+      math.ceil((math.sqrt(4.0 * k / density) / cellH - 1.0) / 2.0).toInt))
   }
 
   /** Brute-force oracle-shaped variant (used by tests and as the fallback). */

@@ -1,9 +1,16 @@
 package graft
 
-import graft.core.{RayCast, WktParser}
+import graft.core.{CellIndex, RayCast, WktParser}
 import graft.functions.GraftFunctions._
 import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.ListenerBusHooks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Operator-level correctness: spatial join vs an O(n*m) brute-force oracle
   * on NON-rectangular polygons with holes, salted == plain, kNN vs brute
@@ -54,6 +61,48 @@ class OperatorsSpec extends SparkTestBase {
     assert(plain == salted)
   }
 
+  /** Cell `pts` into a parquet table with [[Knn.writeCelledCorpus]] and read
+    * it back: the corpus shape [[Knn.knnCelled]] serves. Returns the
+    * table's directory too, so a test can delete it. */
+  private def celledCorpus(pts: DataFrame, level: Int) = {
+    val dir = java.nio.file.Files.createTempDirectory("knn-corpus").toString
+    Knn.writeCelledCorpus(pts, s"$dir/celled", level)
+    (spark.read.parquet(s"$dir/celled"), dir)
+  }
+
+  private def knnRows(df: DataFrame) =
+    df.select("query_id", "point_id", "rnk").as[(Long, Long, Int)].collect().toSet
+
+  /** Run `body`; return its value, the Spark jobs it started and its
+    * (local)checkpoint actions — one per kNN round. */
+  private def counted[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val checkpoints = new AtomicInteger
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val actionListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName.toLowerCase.contains("checkpoint")) checkpoints.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusHooks.drain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(actionListener)
+    try {
+      val out = body
+      ListenerBusHooks.drain(sc)
+      (out, jobs.get, checkpoints.get)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(actionListener)
+    }
+  }
+
+  // corpus points west of lon -20 only, so queries in the east are isolated
+  private def westernPoints(n: Int) = randomPoints(n).filter(_._2 < -20)
+
   test("expanding k-ring kNN == brute force") {
     val pts = randomPoints(3000).toDF("point_id", "lon", "lat")
     val qs = (0 until 20).map(i => (i.toLong, (i * 37 % 340) - 170.0 + 0.3, (i * 53 % 160) - 80.0 + 0.7))
@@ -76,6 +125,16 @@ class OperatorsSpec extends SparkTestBase {
     val b = Knn.knn(qs, pts, k = 4, level = 6, reliableCheckpoint = true)
       .select("query_id", "point_id", "rnk").as[(Long, Long, Int)].collect().toSet
     assert(a == b && a.nonEmpty)
+
+    // knnCelled over a celled parquet corpus, with an isolated query so
+    // more than one round is checkpointed durably
+    val (corpus, _) = celledCorpus(westernPoints(3000).toDF("point_id", "lon", "lat"), 6)
+    val qs2 = Seq((0L, 150.3, 60.7), (1L, -100.2, 10.4), (2L, -60.0, 70.0), (3L, 10.0, 0.0))
+      .toDF("query_id", "qlon", "qlat")
+    val (got, _, rounds) = counted(knnRows(
+      Knn.knnCelled(qs2, corpus, k = 6, level = 6, reliableCheckpoint = true)))
+    assert(got == knnRows(Knn.knnBrute(qs2, corpus, k = 6)))
+    assert(got.size == 4 * 6 && rounds >= 2)
   }
 
   test("kNN over the bucketed celled-corpus table matches the inline path") {
@@ -99,6 +158,91 @@ class OperatorsSpec extends SparkTestBase {
     val qs = Seq((0L, 0.0, 0.0)).toDF("query_id", "qlon", "qlat")
     val out = Knn.knn(qs, pts, k = 9, level = 6).collect()
     assert(out.length == 5)
+
+    // the straggler part over a parquet corpus is checkpointed too: the
+    // result must not read the corpus again
+    val (corpus, dir) = celledCorpus(pts, 6)
+    val qs2 = Seq((0L, 0.0, 0.0), (1L, 40.0, -20.0)).toDF("query_id", "qlon", "qlat")
+    val want = knnRows(Knn.knnBrute(qs2, corpus, k = 9))
+    val res = Knn.knnCelled(qs2, corpus, k = 9, level = 6)
+    FsUtil.rmTree(dir)
+    assert(knnRows(res) == want && want.size == 2 * 5)
+  }
+
+  test("kNN: a query with no corpus point in disk(r0) retires through its sentinel row") {
+    val level = 6
+    val west = westernPoints(3000)
+    val (corpus, _) = celledCorpus(west.toDF("point_id", "lon", "lat"), level)
+    val qs = Seq((0L, 150.3, 60.7), (1L, -100.2, 10.4), (2L, -50.5, -30.1))
+      .toDF("query_id", "qlon", "qlat")
+    val r0 = Knn.startRadius(west.size.toLong, 5, level)
+    val disk0 = CellIndex.disk(150.3, 60.7, level, r0).map(Long.box).toSeq
+    assert(corpus.where($"cell".isin(disk0: _*)).count() == 0,
+      s"fixture: disk($r0) of the isolated query must hold no corpus point")
+    val (got, _, rounds) = counted(knnRows(Knn.knnCelled(qs, corpus, k = 5, level = level)))
+    assert(got == knnRows(Knn.knnBrute(qs, corpus, k = 5)))
+    assert(got.size == 3 * 5)
+    assert(rounds >= 2, s"the isolated query needs a second round, ran $rounds")
+  }
+
+  test("kNN: an exact distance tie at the round bound forces another round; point_id breaks it") {
+    val level = 6
+    val cellH = 180.0 / (1 << level)
+    val west = westernPoints(3000)
+    // dyadic coordinates: every difference and square below is exact
+    val (qlon, qlat) = (60.15625, 5.15625)
+    val r0 = Knn.startRadius(west.size + 4L, 3, level)
+    val b = r0 * cellH
+    assert(b < 25.0, s"fixture: bound $b must stay inside the grid and nearer than the corpus")
+    // two near points, then 10002 and 10003 both at distance exactly b
+    val planted = Seq((10000L, qlon + 0.5, qlat), (10001L, qlon, qlat - 0.25),
+      (10003L, qlon, qlat + b), (10002L, qlon - b, qlat))
+    val disk0 = CellIndex.disk(qlon, qlat, level, r0).toSet
+    assert(planted.forall { case (_, lon, lat) => disk0(CellIndex.cell(lon, lat, level)) },
+      "fixture: round 1 must see both tied points")
+    val (corpus, _) = celledCorpus((west ++ planted).toDF("point_id", "lon", "lat"), level)
+    val qs = Seq((0L, qlon, qlat)).toDF("query_id", "qlon", "qlat")
+    val (got, _, rounds) = counted(knnRows(Knn.knnCelled(qs, corpus, k = 3, level = level)))
+    assert(got == Set((0L, 10001L, 1), (0L, 10000L, 2), (0L, 10002L, 3)))
+    assert(got == knnRows(Knn.knnBrute(qs, corpus, k = 3)))
+    assert(rounds == 2, s"kth distance == bound must not retire in round 1; ran $rounds rounds")
+  }
+
+  test("kNN: an empty query frame returns no rows with the (query_id, point_id, rnk) schema") {
+    val (corpus, _) = celledCorpus(randomPoints(200).toDF("point_id", "lon", "lat"), 6)
+    val qs = Seq.empty[(Long, Double, Double)].toDF("query_id", "qlon", "qlat")
+    val out = Knn.knnCelled(qs, corpus, k = 4, level = 6)
+    assert(out.schema.map(f => f.name -> f.dataType) ==
+      Seq("query_id" -> LongType, "point_id" -> LongType, "rnk" -> IntegerType))
+    assert(out.count() == 0)
+  }
+
+  // level 6, k = 5: every query sits on 5 planted points, so all retire
+  // in round 1
+  private lazy val roundOne = {
+    val qs = (0 until 20).map(q => (q.toLong, (q * 37 % 300) - 150.0, (q * 53 % 140) - 70.0))
+    val planted = for ((q, lon, lat) <- qs; j <- 1 to 5) yield (100000L + q * 5 + j, lon + 0.001 * j, lat)
+    val (corpus, _) = celledCorpus((randomPoints(4000) ++ planted).toDF("point_id", "lon", "lat"), 6)
+    (corpus, qs.toDF("query_id", "qlon", "qlat"))
+  }
+
+  test("kNN budget: one knnCelled batch plus its collect runs at most 6 Spark jobs") {
+    val (corpus, qs) = roundOne
+    Knn.knnCelled(qs, corpus, k = 5, level = 6).collect() // warm-up
+    val (n, jobs, rounds) = counted(Knn.knnCelled(qs, corpus, k = 5, level = 6).collect().length)
+    assert(n == 20 * 5)
+    assert(rounds == 1, s"fixture: every query must retire in round 1, ran $rounds rounds")
+    assert(jobs <= 6, s"one round-1 batch ran $jobs jobs")
+  }
+
+  test("kNN budget: 20 batches in one session leave the CacheManager empty") {
+    val (corpus, qs) = roundOne
+    spark.catalog.clearCache()
+    (0 until 20).foreach { i =>
+      val batch = qs.where($"query_id" % 4 =!= i % 4)
+      assert(Knn.knnCelled(batch, corpus, k = 5, level = 6).collect().length == 15 * 5)
+      assert(spark.sharedState.cacheManager.isEmpty, s"batch $i left a CacheManager entry")
+    }
   }
 
   test("exact dedup keeps smallest id per key") {
