@@ -25,34 +25,27 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  /** Images table with real encoded bytes + WKT footprint. */
-  def prepareImages(spark: SparkSession, sfDir: String): DataFrame = {
+  def prepare(spark: SparkSession, sfDir: String, workDir: String): Unit = {
     GraftFunctions.register(spark)
-    SynthData.images(spark, sfDir)
-      .withColumn("bytes", image_synth(struct(col("image_id"), col("w"), col("h"), col("fmt"))))
-      .withColumn("footprint_wkt", st_point_wkt(col("lon"), col("lat"), 16))
-      .select("image_id", "point_id", "bytes", "w", "h", "fmt", "caption", "phash",
-        "footprint_wkt")
+    prepareWith(spark, SynthData.images(spark, sfDir), sfDir, workDir)
   }
-
-  def prepare(spark: SparkSession, sfDir: String, workDir: String): Unit =
-    prepareWith(spark, prepareImages(spark, sfDir), sfDir, workDir)
 
   /** Scale-test prepare: n synthetic images (table-free) + the sfDir polygon
     * layer. */
   def prepareN(spark: SparkSession, n: Long, sfDir: String, workDir: String): Unit = {
     GraftFunctions.register(spark)
-    val imgs = SynthData.imagesN(spark, n)
+    prepareWith(spark, SynthData.imagesN(spark, n), sfDir, workDir)
+  }
+
+  /** Writes the images table (real encoded bytes + WKT footprint) built from
+    * `synth`, its row count and the sfDir polygon layer. */
+  private def prepareWith(spark: SparkSession, synth: DataFrame, sfDir: String,
+                          workDir: String): Unit = {
+    val imgs = synth
       .withColumn("bytes", image_synth(struct(col("image_id"), col("w"), col("h"), col("fmt"))))
       .withColumn("footprint_wkt", st_point_wkt(col("lon"), col("lat"), 16))
       .select("image_id", "point_id", "bytes", "w", "h", "fmt", "caption", "phash",
         "footprint_wkt")
-    prepareWith(spark, imgs, sfDir, workDir)
-  }
-
-  private def prepareWith(spark: SparkSession, imgs: DataFrame, sfDir: String,
-                          workDir: String): Unit = {
-    GraftFunctions.register(spark)
     // repartition only when the source is under-partitioned (the sf-table
     // path reads a handful of parquet files): a range-derived synth input
     // is already balanced, and shuffling it would spill the ENCODED bytes
@@ -107,40 +100,13 @@ object Pipeline {
     // (image_id, 1) with map-side partial aggregation.
     val matchCnt = joined.groupBy("image_id")
       .agg(count(lit(1)).as("n_matches"))
-      .persist()
-    val nMatched = matchCnt.count()
-
-    // semi-join pushed BELOW the decode, without shuffling bytes: the
-    // matched-id set is reduced to a fixed-size Bloom filter (broadcastable
-    // no matter how many images matched), so with a SELECTIVE polygon layer
-    // decode work is proportional to matches, not corpus size. False
-    // positives only waste a decode — the exact inner join on matchCnt
-    // below removes them from the output. Runtime-adaptive: when most
-    // images match anyway (dense layer), the filter can't save decode work,
-    // so skip building/applying it and keep the stage overhead at zero.
-    val selective = nMatched < (nImages / 2)
-    // expectedNumItems is CAPPED: sizing by nMatched alone would make the
-    // driver-built literal grow ~10 bits per matched image (1.2 GB at 10^9
-    // matches — a driver/plan-size scale-killer on exactly the selective
-    // inputs this pushdown targets). Past the cap the fpp degrades
-    // gracefully instead: false positives only waste a decode, and the
-    // exact matchCnt join below removes them from the output.
-    val bloomCap = 64L << 20 // ~64 MB of filter at 2% fpp
-    val bloomBytes =
-      if (!selective) Array.empty[Byte]
-      else graft.functions.sketchexprs.toBytes(
-        matchCnt.stat.bloomFilter(xxhash64(col("image_id")),
-          math.min(math.max(nMatched, 1L), bloomCap), 0.02))
 
     // raster-tile assignment: decode pixels and map 8x8 blocks of the
     // footprint bbox (centroid +- half a pixel-degree extent) to tiles —
     // a NARROW stage straight off the parquet scan (bytes never shuffle,
     // nothing broadcast: matchCnt grows with the corpus, so the combine is
     // a skinny shuffle join on image_id instead of a driver-side broadcast)
-    val ptsPruned =
-      if (selective) pts.where(bloom_contains(bloomBytes, xxhash64(col("image_id"))))
-      else pts
-    val tilesPerImage = ptsPruned
+    val tilesPerImage = pts
       .withColumn("half_w", col("w").cast("double") / 2.0 / 1000.0)
       .withColumn("half_h", col("h").cast("double") / 2.0 / 1000.0)
       .withColumn("px", image_decode_dims(col("bytes")))
@@ -166,7 +132,6 @@ object Pipeline {
     val out =
       if (metas.nonEmpty) metas.map(_.rowCount).sum
       else Snapshots.readData(spark, s"$workDir/tile_stats").count() // resumed no-op
-    matchCnt.unpersist(false)
     (out, nImages)
   }
 

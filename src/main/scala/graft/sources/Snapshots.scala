@@ -63,10 +63,6 @@ object Snapshots {
         r.getAs[Long]("row_count"), r.getAs[Long]("lineage_hash"))).toSeq
   }
 
-  /** Partitions already committed for snapshot `sid` (resume set). */
-  def committedPartitions(spark: SparkSession, table: String, sid: Long): Set[Int] =
-    committedMetas(spark, table, sid).map(_.partId).toSet
-
   /** Write `df` bucketed into `nParts` logical partitions with per-partition
     * lineage rows; skips partitions already committed for this snapshot id
     * (idempotent resume). Returns per-partition metadata for the WHOLE
@@ -86,13 +82,17 @@ object Snapshots {
     * then stop WITHOUT flipping the CURRENT pointer or writing the
     * manifest row — a micro-batch commit that doubles as a deterministic
     * mid-snapshot-crash simulation (the snapshot only becomes current once
-    * every partition's lineage row exists). */
+    * every partition's lineage row exists).
+    *
+    * `nParts` must lie in 1..64: the per-part stats ride the write job as
+    * two observed aggregates per part (see below). */
   def writeSnapshot(
       spark: SparkSession, df: DataFrame, table: String,
       snapshotId: Long, nParts: Int, keyCol: String,
       operation: String = "append",
       portableParts: Boolean = false,
       maxPartsPerRun: Int = Int.MaxValue): Seq[PartitionMeta] = {
+    require(nParts >= 1 && nParts <= 64, s"nParts must be in 1..64, got $nParts")
     // refuse to mix layouts: writing snap_id dirs next to a legacy FLAT
     // data/part_id=N table would leave readData's winner resolution
     // pointing at data/snap_id=<old>/... dirs that never existed, making
@@ -140,9 +140,8 @@ object Snapshots {
     // repartition exchange, i.e. inside the write's result stage, where the
     // scheduler applies accumulator updates exactly once per partition
     // (failed and duplicate speculative completions are dropped), so the
-    // lineage stats stay exact under retries at cluster scale. Snapshots
-    // wider than 64 pending parts fall back to the persisted two-job path
-    // rather than generating hundreds of aggregate columns.
+    // lineage stats stay exact under retries at cluster scale. The 1..64
+    // bound on nParts keeps this at most 128 aggregate columns.
     // Dynamic partition overwrite keeps resume safe: a crashed run's
     // partially-written partitions are simply rewritten, and
     // already-committed partitions are filtered out up front.
@@ -165,43 +164,26 @@ object Snapshots {
     // snapshots' files — that immutability is what makes asOf reads and
     // snapshot isolation work); dynamic overwrite within it keeps the
     // crash-resume rewrite of a partially-written partition safe.
-    def writeData(frame: DataFrame): Unit =
-      frame.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(s"$table/data/snap_id=$snapshotId")
-    val repart = filtered.repartition(nParts, col("part_id"))
-    val stats: Map[Int, (Long, Long)] =
-      if (pending.length <= 64) {
-        val obs = org.apache.spark.sql.Observation(
-          s"snap-$snapshotId-${java.util.UUID.randomUUID}")
-        val aggs = pending.flatMap { pid => Seq(
-          sum(when(col("part_id") === pid, 1L).otherwise(0L)).as(s"c$pid"),
-          sum(when(col("part_id") === pid, rowHash).otherwise(0L)).as(s"h$pid")) }
-        // observe ABOVE the repartition: the metrics are collected in the
-        // write result stage itself (see the exactly-once note above)
-        writeData(repart.observe(obs, aggs.head, aggs.tail: _*))
-        val m = obs.get // the write action completed, so this returns promptly
-        def l(k: String): Long = m.get(k) match {
-          case Some(v: java.lang.Number) => v.longValue
-          case _ => 0L // empty input: sums are null
-        }
-        pending.map(pid => pid -> ((l(s"c$pid"), l(s"h$pid")))).toMap
-      } else {
-        val persisted = filtered.persist()
-        writeData(persisted.repartition(nParts, col("part_id")))
-        val s = persisted.groupBy("part_id")
-          .agg(count(lit(1)).as("rows"), sum(rowHash).as("lhash"))
-          .collect()
-          .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-        persisted.unpersist()
-        s
-      }
-
-    val metas = pending.map { pid =>
-      val (rows, lhash) = stats.getOrElse(pid, (0L, 0L))
-      PartitionMeta(snapshotId, pid, rows, lhash)
+    val obs = org.apache.spark.sql.Observation(
+      s"snap-$snapshotId-${java.util.UUID.randomUUID}")
+    val aggs = pending.flatMap { pid => Seq(
+      sum(when(col("part_id") === pid, 1L).otherwise(0L)).as(s"c$pid"),
+      sum(when(col("part_id") === pid, rowHash).otherwise(0L)).as(s"h$pid")) }
+    // observe ABOVE the repartition: the metrics are collected in the
+    // write result stage itself (see the exactly-once note above)
+    filtered.repartition(nParts, col("part_id"))
+      .observe(obs, aggs.head, aggs.tail: _*)
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("part_id")
+      .parquet(s"$table/data/snap_id=$snapshotId")
+    val observed = obs.get // the write action completed, so this returns promptly
+    def l(k: String): Long = observed.get(k) match {
+      case Some(v: java.lang.Number) => v.longValue
+      case _ => 0L // empty input: sums are null
     }
+
+    val metas = pending.map(pid => PartitionMeta(snapshotId, pid, l(s"c$pid"), l(s"h$pid")))
     // metadata-scale rows: written directly by the driver (atomic publish),
     // not via a Spark job — see MetaParquet
     MetaParquet.appendLineage(s"${metaDir(table)}/partitions",
@@ -297,8 +279,7 @@ object Snapshots {
     Paths.get(s"${metaDir(table)}/snapshots/manifest-$sid.parquet")
 
   /** Entry names of `dir` (empty when it is not a directory). Every
-    * name-based listing goes through here; [[ensureManifest]] keeps two raw
-    * `Files.list` sites that need Path objects (temp-part lookup/cleanup). */
+    * directory listing in this object goes through here. */
   private def entryNames(dir: Path): Vector[String] = {
     if (!Files.isDirectory(dir)) return Vector.empty
     val s = Files.list(dir)

@@ -104,26 +104,69 @@ class ImagesSpec extends SparkTestBase {
     assert(out.count() > 0)
   }
 
-  test("sparse polygon layer: bloom-pruned decode, pixel totals match the matched set") {
+  test("sparse polygon layer: tile totals weight each matched image by its match count") {
     val work = java.nio.file.Files.createTempDirectory("pipe-sparse").toString
     Pipeline.prepare(spark, "/root/testdata/sf0.001", work)
-    // overwrite the layer with ONE small polygon -> selective (engages the
-    // bloom semi-join below the decode; exact join removes false positives)
-    Seq((1L, "POLYGON ((0 0, 8 0, 8 6, 0 6, 0 0))")).toDF("poly_id", "wkt")
-      .write.mode("overwrite").parquet(s"$work/polygons")
+    // overwrite the layer with ONE small polygon -> a selective layer
+    val small = (1L, "POLYGON ((0 0, 8 0, 8 6, 0 6, 0 0))")
+    Seq(small).toDF("poly_id", "wkt").write.mode("overwrite").parquet(s"$work/polygons")
     val (tiles, n) = Pipeline.run(spark, work)
     assert(tiles > 0)
-    val matched = graft.sources.SynthData.images(spark, "/root/testdata/sf0.001")
-      .where($"lon" > 0 && $"lon" < 8 && $"lat" > 0 && $"lat" < 6)
+    val images = graft.sources.SynthData.images(spark, "/root/testdata/sf0.001")
+    val inSmall = $"lon" > 0 && $"lon" < 8 && $"lat" > 0 && $"lat" < 6
+    val matched = images.where(inSmall)
     val mCount = matched.count()
     assert(mCount > 0 && mCount < n / 2, "layer must be selective for this test")
     // each matched image matches exactly one polygon (n_matches = 1), so
     // total weighted pixels across tiles == sum of matched images' w*h
     // (pixel conservation through the block explode)
-    val gotPixels = Snapshots.readData(spark, s"$work/tile_stats")
-      .agg(sum("pixels")).collect()(0).getLong(0)
+    def totals(): (Long, Long) = {
+      val r = Snapshots.readData(spark, s"$work/tile_stats")
+        .agg(sum("pixels"), sum("assignments")).collect()(0)
+      (r.getLong(0), r.getLong(1))
+    }
+    val gotPixels = totals()._1
     val wantPixels = matched.agg(sum($"w".cast("long") * $"h")).collect()(0).getLong(0)
     assert(gotPixels == wantPixels, s"pixels $gotPixels != matched-set pixels $wantPixels")
+
+    // second layer: one polygon covering every image plus the small one, so
+    // images inside the small polygon match twice (n_matches = 2). Each
+    // tile-block row of an image counts n_matches assignments and
+    // px_count * n_matches pixels
+    Seq((2L, "POLYGON ((-175 -85, 175 -85, 175 85, -175 85, -175 -85))"), small)
+      .toDF("poly_id", "wkt").write.mode("overwrite").parquet(s"$work/polygons")
+    Pipeline.run(spark, work, snapshotId = 2L)
+    // expected totals, image by image: the footprint bbox and decoded dims
+    // the pipeline tiles (zoom 8, 8x8 blocks), weighted by n_matches
+    val halfW = $"w".cast("double") / 2.0 / 1000.0
+    val halfH = $"h".cast("double") / 2.0 / 1000.0
+    val want = spark.read.parquet(s"$work/images")
+      .join(images.select($"image_id", when(inSmall, 2L).otherwise(1L).as("n_matches")),
+        "image_id")
+      .withColumn("c", st_centroid(st_geomfromtext($"footprint_wkt")))
+      .withColumn("px", image_decode_dims($"bytes"))
+      .withColumn("n_tiles", size(image_tile_blocks(struct(
+        ($"c.lon" - halfW).as("lon_min"), ($"c.lat" - halfH).as("lat_min"),
+        ($"c.lon" + halfW).as("lon_max"), ($"c.lat" + halfH).as("lat_max"),
+        $"px.w", $"px.h", lit(8).as("z"), lit(8).as("block")))))
+      .agg(sum($"w".cast("long") * $"h" * $"n_matches"),
+        sum($"n_tiles".cast("long") * $"n_matches"), max($"n_matches"))
+      .collect()(0)
+    assert(want.getLong(2) == 2L, "fixture: some image must match both polygons")
+    val got = totals()
+    assert(got == ((want.getLong(0), want.getLong(1))),
+      s"(pixels, assignments) $got != n_matches-weighted (${want.getLong(0)}, ${want.getLong(1)})")
+  }
+
+  test("pipeline budget: one Pipeline.run on sf0.001 runs at most 11 Spark jobs, caches nothing") {
+    val work = java.nio.file.Files.createTempDirectory("pipe-budget").toString
+    Pipeline.prepare(spark, "/root/testdata/sf0.001", work)
+    spark.catalog.clearCache()
+    Pipeline.run(spark, work) // warm-up
+    val ((tiles, _), jobs) = jobsDuring(Pipeline.run(spark, work, snapshotId = 2L))
+    assert(tiles > 0)
+    assert(spark.sharedState.cacheManager.isEmpty, "Pipeline.run left a CacheManager entry")
+    assert(jobs <= 11, s"one Pipeline.run ran $jobs jobs")
   }
 
   test("snapshot write + lineage + idempotent resume") {
@@ -154,6 +197,12 @@ class ImagesSpec extends SparkTestBase {
     val m4meta = Snapshots.readPartitionMeta(spark, s"$dir/t")
       .orderBy("part_id").collect().map(_.getLong(3))
     assert(m4meta.length == 4 && m4meta.toSet.size >= 3)
+    // per-part stats ride the write job as two observed aggregates per part,
+    // so a snapshot is at most 64 parts wide; a wider one is refused up front
+    val wide = intercept[IllegalArgumentException](Snapshots.writeSnapshot(spark, df,
+      s"$dir/t3", snapshotId = 1L, nParts = 65, keyCol = "k"))
+    assert(wide.getMessage.contains("nParts must be in 1..64, got 65"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/t3")))
   }
 
   test("micro-batch commit: partial run leaves CURRENT unmoved, resume completes") {

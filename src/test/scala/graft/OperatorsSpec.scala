@@ -5,7 +5,6 @@ import graft.functions.GraftFunctions._
 import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.ListenerBusHooks
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -76,28 +75,18 @@ class OperatorsSpec extends SparkTestBase {
   /** Run `body`; return its value, the Spark jobs it started and its
     * (local)checkpoint actions — one per kNN round. */
   private def counted[T](body: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
     val checkpoints = new AtomicInteger
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     val actionListener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         if (funcName.toLowerCase.contains("checkpoint")) checkpoints.incrementAndGet()
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    ListenerBusHooks.drain(sc)
-    sc.addSparkListener(jobListener)
+    ListenerBusHooks.drain(spark.sparkContext)
     spark.listenerManager.register(actionListener)
     try {
-      val out = body
-      ListenerBusHooks.drain(sc)
-      (out, jobs.get, checkpoints.get)
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(actionListener)
-    }
+      val (out, jobs) = jobsDuring(body)
+      (out, jobs, checkpoints.get)
+    } finally spark.listenerManager.unregister(actionListener)
   }
 
   // corpus points west of lon -20 only, so queries in the east are isolated

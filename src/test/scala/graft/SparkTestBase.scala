@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.ListenerBusHooks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +13,22 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
     graft.functions.GraftFunctions.register(spark)
+  }
+
+  /** Run `body`; return its value and the Spark jobs it started. */
+  protected def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusHooks.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusHooks.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 }
 
